@@ -22,14 +22,6 @@ from typing import Any
 from openeo_processes_dask_ml_spark.graph.registry import ProcessRegistry, default_registry
 
 
-class GraphNode(dict):
-    pass
-
-
-def _is_subgraph(v: Any) -> bool:
-    return isinstance(v, dict) and "process_graph" in v
-
-
 def _result_node(graph: dict) -> str:
     results = [k for k, v in graph.items() if v.get("result")]
     if len(results) != 1:

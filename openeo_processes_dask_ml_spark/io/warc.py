@@ -945,12 +945,6 @@ def stream_warc_sink(
     )
 
 
-def read_warc_file(path: str) -> list[dict]:
-    """Driver-side convenience (tests): parse one shard from disk."""
-    with open(path, "rb") as fh:
-        return list(parse_warc_records(fh.read()))
-
-
 def stream_warc(
     spark: SparkSession,
     path: str,

@@ -243,15 +243,6 @@ def _subsample(size: int, bits: int) -> int:
     return (size + (1 << bits) - 1) >> bits
 
 
-def _prefix_value(code: int, br: _Bits) -> int:
-    """LZ77 length/distance prefix decoding (VP8L spec 3.2.1)."""
-    if code < 4:
-        return code + 1
-    extra = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra
-    return offset + br.bits(extra) + 1
-
-
 def _read_groups(br: _Bits, cache_bits: int, n_groups: int):
     alph_g = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
     groups = []

@@ -11,6 +11,9 @@ the spill/barrier entirely:
   tiling             ->  tile-key columns = floor(coord_index / T),
                          remainder rows dropped by a WHERE
                          (data_model.py:393-424 semantics)
+  oversized axes     ->  tile-aligned axis chunks, one tile plan per
+                         chunk combination, unioned (the reference's
+                         get_index_subsets walk)
   1 chunk = 1 batch  ->  groupBy(tile/batch keys) + applyInPandas
   .npy + subprocess  ->  executor-local model singleton, Arrow batches
   reassembly         ->  the UDF emits output rows with regenerated
@@ -21,14 +24,23 @@ All-NaN batches skip prediction and emit missing values, matching
 data_model.py:899-901, 997-1006 (the reference's NaN sentinel surfaces
 as SQL NULL through the Arrow boundary — Spark's missing marker).
 
+``run_model_tiled`` is one straight path for every cube: one capped
+scan of the tiled axes, each axis turned into a list of chunks (a
+single chunk unless it exceeds ``max_axis_elements``), the band
+selection, scaling and cast built once, then one tile plan per chunk
+combination. With no oversized axis that is exactly one plan — no
+filter, no union.
+
 Scale shape: the only shuffle is the groupBy on tile keys — one row per
 cell moves once; the model runs streamwise per partition; grid
-coordinate arrays (driver-held) are raster-resolution-sized, not
-data-sized.
+coordinate arrays (driver-held) are raster-resolution-sized (at most
+``max_axis_elements`` per axis chunk), not data-sized.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -74,8 +86,8 @@ def tile_count(n_cells: int, tile: int) -> int:
 
 def _axis_kind(df: DataFrame, col: str) -> str | None:
     """'ts' / 'date' for temporal axis columns, None otherwise —
-    derived from the schema, not the values, so chunked sub-requests
-    agree with the outer request."""
+    derived from the schema, not the values, so every chunk of an axis
+    gets the same kind."""
     dt = df.schema[col].dataType
     if isinstance(dt, T.DateType):
         return "date"
@@ -91,7 +103,7 @@ def _axis_array(vals, kind: str | None) -> np.ndarray:
     branch (and every timedelta computation) needs real datetime64
     arrays, so temporal axes are normalized here. Without this, a
     model that RESIZES a temporal dim fell through to the string
-    fallback and emitted strings into a timestamp column (r16 fix)."""
+    fallback and emitted strings into a timestamp column."""
     if kind is not None:
         try:
             return np.array(vals, dtype="datetime64[ns]")
@@ -151,10 +163,10 @@ def regenerate_coords(
         if next_coord is not None:
             end = np.datetime64(next_coord, "ns").astype(np.int64)
         elif coord_width is not None:
-            # chunked sub-requests pass the GLOBAL mean spacing —
-            # their full_axis is chunk-local, whose mean differs on
-            # irregular axes (ADVICE r15: 'only batch composition
-            # differs, never values')
+            # a chunk of an oversized axis passes the GLOBAL mean
+            # spacing — its full_axis is chunk-local, whose mean differs
+            # on irregular axes, and chunking may change which tiles
+            # share a batch but never values
             end = (
                 (in_coords[-1] + np.timedelta64(coord_width))
                 .astype("datetime64[ns]")
@@ -194,18 +206,18 @@ def collapse_coords(in_coords: np.ndarray):
 
 @dataclass
 class _TiledDim:
-    """One non-band model dim resolved against the cube."""
+    """One non-band model dim resolved against the cube, restricted to
+    one chunk of its axis (the whole axis unless it exceeds the cap)."""
 
     model_dim: str
     cube_col: str
-    tile: int  # model input size on this dim (-1 -> full extent)
-    coords: np.ndarray  # global sorted coordinates (raster-resolution-sized)
-    next_after: object | None = None  # first coord AFTER this axis slice
-    # (set on chunked sub-requests so the last tile of a chunk still
-    # sees its true successor for datetime coordinate regeneration)
-    width: object | None = None  # GLOBAL cell width override — chunked
-    # sub-requests must not derive the width from their chunk-local
-    # first spacing on irregular axes (r15 review)
+    tile: int  # model input size on this dim (-1 resolved to the full extent)
+    coords: np.ndarray  # the chunk's sorted coordinates (raster-resolution-sized)
+    next_after: object | None = None  # first coord AFTER the chunk, so the
+    # chunk's last tile still sees its true successor for datetime
+    # coordinate regeneration
+    width: object | None = None  # the axis' GLOBAL cell width: a chunk
+    # must not derive it from its own first spacing on irregular axes
 
 
 def _collect_axis_chunks(
@@ -219,7 +231,7 @@ def _collect_axis_chunks(
     discipline: at most chunk_len+1 values ever reach the driver) over
     rows strictly above the previous boundary, so driver memory stays
     O(chunk_len) no matter how long the axis is. K = ceil(axis/chunk)
-    scans — the price of not holding the axis; each sub-request scans
+    scans — the price of not holding the axis; each chunk's plan scans
     its slice again anyway."""
     chunks: list[tuple] = []
     last = None
@@ -246,8 +258,6 @@ def run_model_tiled(
     predict_fn: Callable[[np.ndarray], np.ndarray],
     out_value_col: str = "value",
     max_axis_elements: int = 10_000_000,
-    auto_chunk: bool = True,
-    _axis_override: dict | None = None,
 ) -> DataFrame:
     """Apply ``predict_fn`` (batch tensor in model dim_order ->
     output tensor in output dim_order) over the cube, tiled to the
@@ -262,25 +272,31 @@ def run_model_tiled(
     post-expr) wrap ``predict_fn`` inside the UDF, resolved through the
     allowlisted importlib dispatch.
 
-    An axis longer than ``max_axis_elements`` no longer raises: with
-    ``auto_chunk`` (default) the request self-partitions into
-    sub-grid requests along the oversized axes — the Spark analog of
-    the reference's ``get_index_subsets`` chunk walk
-    (data_model.py:393-424). Chunk boundaries are MULTIPLES OF THE
-    TILE SIZE in global index space, so every sub-request's tiles are
-    exactly the global tiling's tiles and only the global trailing
-    remainder is dropped; each chunk carries one lookahead coordinate
-    so datetime regeneration at chunk boundaries sees its true
-    successor. The only observable difference vs one giant request is
-    batch COMPOSITION (tiles are batched within a chunk), which
-    affects model-call grouping, never values. Axes the model
-    consumes whole (shape -1) and the band universe cannot chunk and
-    still raise with guidance. ``_axis_override`` is the internal
-    recursion channel carrying pre-collected ``{col: (coords,
-    next_after)}`` axes so sub-requests never rescan."""
+    One path serves every cube:
+
+    1. one capped aggregation collects every tiled axis (and the band
+       universe when ``cube.attrs`` has no ``band_labels`` hint);
+    2. each tiled axis becomes a list of ``(coords, next_after, width)``
+       chunks. An axis within ``max_axis_elements`` is one chunk; a
+       longer one is walked in chunks whose boundaries are MULTIPLES OF
+       THE TILE SIZE in global index space — the reference's
+       ``get_index_subsets`` walk (data_model.py:393-424) — so every
+       chunk's tiles are global tiles and only the global trailing
+       remainder is dropped. Each chunk carries its successor
+       coordinate and the axis' global cell width, so regenerated
+       coordinates equal the whole-axis ones. Axes the model consumes
+       whole (shape -1) and the band universe cannot be chunked and
+       raise with guidance;
+    3. validation (against global axis sizes), derived bands, band
+       selection, scaling and the cast run once on the whole cube;
+    4. each chunk combination gets one tile plan — broadcast index
+       join, tile and batch keys, ``applyInPandas`` — and the plans are
+       unioned. With every axis in one chunk that is a single plan.
+
+    Chunking changes only which tiles share a model batch (batches
+    never span chunks), never the values."""
     from openeo_processes_dask_ml_spark.utils.dim_utils import resolve_dim
 
-    orig_predict_fn = predict_fn  # recursion must not double-wrap pre/post
     pre = descriptor.input.pre_processing_function
     post = descriptor.output.post_processing_function
     if pre or post:
@@ -305,17 +321,11 @@ def run_model_tiled(
     model_bands = [b.name for b in inp.bands]
 
     # --- resolve model dims against the cube --------------------------
-    in_dims: list[tuple[str, int]] = [
-        (d, s)
-        for d, s in zip(inp.dim_order, inp.shape)
-        if d.lower() not in BATCH_DIM_NAMES
-    ]
-    cube_sizes: dict[str, int] = {}
-    coords_by_col: dict[str, np.ndarray] = {}
-    tiled: list[_TiledDim] = []
     band_axis_dim: str | None = None
     resolved: list[tuple[str, int, str, str]] = []  # (dim, size, role, col)
-    for d, s in in_dims:
+    for d, s in zip(inp.dim_order, inp.shape):
+        if d.lower() in BATCH_DIM_NAMES:
+            continue
         role = resolve_dim(d, cube.dims.keys())
         if role == "bands" or (role is None and d.lower() in ("band", "bands", "channel")):
             band_axis_dim = d
@@ -324,192 +334,87 @@ def run_model_tiled(
             raise ValueError(f"model dim {d!r} not found in cube dims {cube.dims}")
         resolved.append((d, s, role, cube.dims[role]))
 
-    # ONE aggregation pass collects every tiled dim's coordinate axis
-    # (and the band universe when no metadata hint exists) — the former
-    # per-dim distinct().collect() evaluated the cube once PER dim,
-    # which on a decoded raster cube meant one full decode fan-out per
-    # axis. Axes are bounded (they become driver-side tile grids either
-    # way); ordering happens driver-side.
+    # --- one scan: every tiled axis + the band universe ---------------
+    # ONE aggregation pass collects every coordinate axis — a per-dim
+    # distinct().collect() would evaluate the cube once PER dim, which
+    # on a decoded raster cube means one full decode fan-out per axis.
+    # The cap sits INSIDE the aggregation: sort_array + slice run
+    # executor-side on the single final agg row, so the driver sees at
+    # most max_axis_elements + 1 values per axis. Axes are bounded by
+    # axis length, not data volume, but a planetary 10 m grid axis is
+    # millions of doubles; past the default cap (1e7 ~ 80 MB/axis) an
+    # axis is walked in chunks instead.
     band_hint = cube.attrs.get("band_labels") if band_col else None
-    override = dict(_axis_override or {})
-    scan_cols = list(
-        dict.fromkeys(
-            c for _, _, _, c in resolved if c not in override
-        )
-    )
-    want_bands_scan = bool(model_bands and band_col) and band_hint is None
-    if want_bands_scan and band_col not in scan_cols:
+    tile_of = {col: s for _, s, _, col in resolved}
+    scan_cols = list(tile_of)
+    if model_bands and band_col and band_hint is None and band_col not in tile_of:
         scan_cols.append(band_col)
-    if scan_cols:
-        # capped INSIDE the aggregation (VERDICT r8 #7): sort_array +
-        # slice run executor-side on the single final agg row, so an
-        # oversized axis never crosses to the driver — the driver sees
-        # at most max_axis_elements + 1 values per dim and raises with
-        # guidance instead of silently ballooning. Axes are bounded by
-        # axis length, not data volume, but a planetary 10 m grid axis
-        # is millions of doubles; the default cap (1e7 ~ 80 MB/axis)
-        # marks the point where per-tile requests should be issued
-        # instead.
-        axes_row = cube.df.agg(
+    axes_row = (
+        cube.df.agg(
             *[
                 F.slice(
-                    F.sort_array(F.collect_set(c)),
-                    1,
-                    max_axis_elements + 1,
+                    F.sort_array(F.collect_set(c)), 1, max_axis_elements + 1
                 ).alias(c)
                 for c in scan_cols
             ]
         ).collect()[0]
-        over = [c for c in scan_cols if len(axes_row[c]) > max_axis_elements]
-        if over:
-            tile_of = {col: s for _, s, _, col in resolved}
-            unchunkable = [
-                c
-                for c in over
-                if c not in tile_of or tile_of[c] == -1 or not auto_chunk
-            ]
-            if unchunkable:
-                raise ValueError(
-                    f"cube axis {unchunkable[0]!r} exceeds "
-                    f"max_axis_elements={max_axis_elements} and cannot "
-                    "auto-chunk (band universe / full-extent model dim "
-                    "/ auto_chunk=False); tile the request yourself or "
-                    "raise the cap explicitly"
-                )
-            # self-partition into sub-grid requests along the
-            # oversized axes; under-cap axes (and the band universe,
-            # via the attrs hint below) pass through pre-collected so
-            # sub-requests run zero axis scans
-            passdown = dict(override)
-            for c in scan_cols:
-                if c not in over and c != band_col:
-                    passdown[c] = (
-                        _axis_array(axes_row[c], _axis_kind(cube.df, c)),
-                        None,
-                        None,
-                    )
-            sub_attrs = dict(cube.attrs)
-            if want_bands_scan and band_col in scan_cols:
-                sub_attrs["band_labels"] = [
-                    v.item() if hasattr(v, "item") else v
-                    for v in axes_row[band_col]
-                ]
-            chunk_lists: dict[str, list[tuple]] = {}
-            axis_width: dict[str, object] = {}
-            axis_kinds: dict[str, str | None] = {}
-            for c in over:
-                tile = tile_of[c]
-                axis_kinds[c] = _axis_kind(cube.df, c)
-                chunk_len = max(tile, (max_axis_elements // tile) * tile)
-                all_chunks = _collect_axis_chunks(
-                    cube.df, c, chunk_len, axis_kinds[c]
-                )
-                # the GLOBAL cell width (numeric: the axis' first
-                # spacing; datetime: the full-axis MEAN spacing, which
-                # telescopes to (last-first)/(n-1) so it never needs
-                # the whole axis in driver memory). Chunk-local
-                # spacings differ on irregular axes and would shift
-                # regenerated coordinates vs the unchunked run
-                # (r15 review; ADVICE r15 for the datetime analog).
-                g0 = all_chunks[0][0]
-                width = None
-                if np.issubdtype(g0.dtype, np.number):
-                    if g0.size > 1:
-                        width = g0[1] - g0[0]
-                elif np.issubdtype(g0.dtype, np.datetime64):
-                    n_total = sum(len(ch[0]) for ch in all_chunks)
-                    if n_total > 1:
-                        span = (
-                            all_chunks[-1][0][-1] - all_chunks[0][0][0]
-                        ).astype("timedelta64[ns]")
-                        # positive-span floor division == np.mean's
-                        # float-then-truncate over the diffs
-                        width = span // (n_total - 1)
-                axis_width[c] = width
-                kept = [
-                    ch
-                    for ch in all_chunks
-                    # a trailing chunk shorter than one tile holds only
-                    # the global remainder — dropped, as global tiling
-                    # would drop it
-                    if len(ch[0]) >= tile
-                ]
-                # every chunk under one tile (tile > cap with a short
-                # axis): keep one sub-request so the recursion
-                # reproduces the GLOBAL semantics for an axis shorter
-                # than the model tile (validate_cube's size check
-                # raises), instead of silently returning nothing
-                chunk_lists[c] = kept or all_chunks[:1]
-            import itertools
-
-            parts: list[DataFrame] = []
-            combos = itertools.product(*(chunk_lists[c] for c in over))
-            for combo in combos:
-                sub_df = cube.df
-                sub_over = {}
-                for c, (coords, nxt) in zip(over, combo):
-                    lo, hi = (
-                        _py_scalar(v, axis_kinds[c])
-                        for v in (coords.flat[0], coords.flat[-1])
-                    )
-                    sub_df = sub_df.filter(
-                        (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
-                    )
-                    sub_over[c] = (coords, nxt, axis_width[c])
-                sub_cube = CubeFrame(
-                    sub_df, dict(cube.dims), cube.value_col, sub_attrs
-                )
-                parts.append(
-                    run_model_tiled(
-                        sub_cube,
-                        descriptor,
-                        orig_predict_fn,
-                        out_value_col=out_value_col,
-                        max_axis_elements=max_axis_elements,
-                        auto_chunk=False,  # chunks are cap-sized by construction
-                        _axis_override={**passdown, **sub_over},
-                    )
-                )
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-        axis_by_col = {
-            c: _axis_array(axes_row[c], _axis_kind(cube.df, c))
-            for c in scan_cols
-        }
-    else:
-        axis_by_col = {}
-    next_after_by_col: dict[str, object] = {}
-    width_by_col: dict[str, object] = {}
-    for c, ov in override.items():
-        coords, nxt = ov[0], ov[1]
-        axis_by_col[c] = coords
-        next_after_by_col[c] = nxt
-        width_by_col[c] = ov[2] if len(ov) > 2 else None
-    for d, s, role, col in resolved:
-        coords = axis_by_col[col]
-        cube_sizes[role] = coords.size
-        coords_by_col[col] = coords
-        tiled.append(
-            _TiledDim(
-                d,
-                col,
-                s if s != -1 else coords.size,
-                coords,
-                next_after_by_col.get(col),
-                width_by_col.get(col),
+        if scan_cols
+        else {}
+    )
+    over = [c for c in scan_cols if len(axes_row[c]) > max_axis_elements]
+    for c in over:
+        if tile_of.get(c, -1) == -1:
+            raise ValueError(
+                f"cube axis {c!r} exceeds max_axis_elements="
+                f"{max_axis_elements} and cannot be chunked (band universe "
+                "/ full-extent model dim); tile the request yourself or "
+                "raise the cap explicitly"
             )
+
+    # --- each tiled axis -> [(coords, next_after, width)] chunks -------
+    kind_of = {c: _axis_kind(cube.df, c) for c in tile_of}
+    chunks_of: dict[str, list[tuple]] = {}
+    size_of: dict[str, int] = {}
+    for c, tile in tile_of.items():
+        if c not in over:
+            coords = _axis_array(axes_row[c], kind_of[c])
+            chunks_of[c], size_of[c] = [(coords, None, None)], coords.size
+            continue
+        walk = _collect_axis_chunks(
+            cube.df, c, max(tile, (max_axis_elements // tile) * tile), kind_of[c]
         )
+        size_of[c] = sum(len(coords) for coords, _ in walk)
+        # the GLOBAL cell width (numeric: the axis' first spacing;
+        # datetime: the full-axis MEAN spacing, which telescopes to
+        # (last-first)/(n-1) so it never needs the whole axis in driver
+        # memory). Chunk-local spacings differ on irregular axes and
+        # would shift regenerated coordinates vs the whole-axis run.
+        g0 = walk[0][0]
+        width = None
+        if np.issubdtype(g0.dtype, np.number):
+            if g0.size > 1:
+                width = g0[1] - g0[0]
+        elif np.issubdtype(g0.dtype, np.datetime64) and size_of[c] > 1:
+            span = (walk[-1][0][-1] - g0[0]).astype("timedelta64[ns]")
+            # positive-span floor division == np.mean's
+            # float-then-truncate over the diffs
+            width = span // (size_of[c] - 1)
+        # a trailing chunk shorter than one tile holds only the global
+        # remainder and is dropped, as global tiling drops it. An axis
+        # shorter than one tile keeps its single chunk so it behaves as
+        # an unchunked one (validate_cube's size error, or no full tile)
+        # instead of silently planning nothing.
+        chunks_of[c] = [
+            (coords, nxt, width) for coords, nxt in walk if len(coords) >= tile
+        ] or [(*walk[0], width)]
 
     if model_bands and band_col:
-        cube_bands = (
-            list(band_hint)
-            if band_hint is not None
-            else [v.item() if hasattr(v, "item") else v for v in axis_by_col[band_col]]
-        )
+        cube_bands = list(band_hint if band_hint is not None else axes_row[band_col])
         band_map = validate_cube(
-            descriptor, list(cube.dims.keys()), cube_sizes, cube_bands
+            descriptor,
+            list(cube.dims.keys()),
+            {role: size_of[col] for _, _, role, col in resolved},
+            cube_bands,
         )
         ordered_band_labels = [band_map[b] for b in model_bands]
     else:
@@ -541,70 +446,25 @@ def run_model_tiled(
         )
     df = df.withColumn(cube.value_col, F.col(cube.value_col).cast("double"))
 
-    # --- stage 7: tile keys; remainder dropped ------------------------
-    # coord -> index via a broadcast join against a tiny index table
-    # (raster-resolution-sized). A create_map literal would inline the
-    # whole coordinate axis into the serialized plan — fatal for a
-    # 100k-coordinate dim; the broadcast table costs the same one
-    # driver round-trip but keeps the plan O(1).
-    batch_size = get_batch_size(descriptor)
-    group_keys: list[str] = []
-    n_tiles: dict[str, int] = {}
-    spark = df.sparkSession
-    for td in tiled:
-        full = tile_count(td.coords.size, td.tile)
-        n_tiles[td.cube_col] = full
-        # datetime64[ns].tolist() yields raw int nanoseconds — convert
-        # temporal axes back to the python objects Spark rows accept
-        # (µs for timestamps — Spark's native precision — days for dates)
-        coord_vals = td.coords
-        if np.issubdtype(coord_vals.dtype, np.datetime64):
-            unit = "D" if _axis_kind(cube.df, td.cube_col) == "date" else "us"
-            coord_vals = coord_vals.astype(f"datetime64[{unit}]")
-        idx_rows = [(v, i) for i, v in enumerate(coord_vals.tolist())]
-        idx_df = local_rows_df(
-            spark,
-            idx_rows,
-            f"`{td.cube_col}` {df.schema[td.cube_col].dataType.simpleString()}, `__idx_{td.cube_col}` long",
-        )
-        df = df.join(F.broadcast(idx_df), td.cube_col, "inner").filter(
-            F.col(f"__idx_{td.cube_col}") < full * td.tile
-        )
-        df = df.withColumn(
-            f"__tile_{td.cube_col}", (F.col(f"__idx_{td.cube_col}") / td.tile).cast("long")
-        )
-        group_keys.append(f"__tile_{td.cube_col}")
-
-    # linear tile id -> batch id groups `batch_size` tiles per model call
-    linear = F.lit(0)
-    for td in tiled:
-        linear = linear * n_tiles[td.cube_col] + F.col(f"__tile_{td.cube_col}")
-    df = df.withColumn("__batch_id", (linear / batch_size).cast("long"))
-
+    # --- output schema (the same for every chunk combination) ---------
     passthrough = [
-        v
-        for k, v in cube.dims.items()
-        if v not in [t.cube_col for t in tiled] and v != band_col
+        v for v in cube.dims.values() if v not in tile_of and v != band_col
     ]
-    keys = passthrough + ["__batch_id"]
-
-    # --- output schema ------------------------------------------------
     out_dims = [d for d in outp.dim_order if d.lower() not in BATCH_DIM_NAMES]
     out_shape = [
         s
         for d, s in zip(outp.dim_order, outp.shape)
         if d.lower() not in BATCH_DIM_NAMES
     ]
-    in_dim_names = {td.model_dim: td for td in tiled}
-
+    col_of_dim = {d: col for d, _, _, col in resolved}
     fields = [df.schema[c] for c in passthrough]
     out_cols: list[str] = []
     for d in out_dims:
         if d == band_axis_dim or d.lower() in ("band", "bands", "channel", "channels"):
             col_name = band_col or "band"
             fields.append(T.StructField(col_name, T.StringType()))
-        elif d in in_dim_names:
-            col_name = in_dim_names[d].cube_col
+        elif d in col_of_dim:
+            col_name = col_of_dim[d]
             fields.append(df.schema[col_name])
         else:
             col_name = d
@@ -613,185 +473,214 @@ def run_model_tiled(
     # dims consumed by the model but absent from the output collapse to
     # a single coordinate column: numeric -> tile-center mean (double);
     # datetime/string -> first coord (keep the input column's type)
-    collapsed = [
-        td for td in tiled if td.model_dim not in out_dims
-    ]
-    for td in collapsed:
-        if td.coords.size and np.issubdtype(np.asarray(td.coords).dtype, np.number):
-            fields.append(T.StructField(td.cube_col, T.DoubleType()))
+    for d, col in col_of_dim.items():
+        if d in out_dims:
+            continue
+        coords = chunks_of[col][0][0]
+        if coords.size and np.issubdtype(coords.dtype, np.number):
+            fields.append(T.StructField(col, T.DoubleType()))
         else:
-            fields.append(df.schema[td.cube_col])
+            fields.append(df.schema[col])
     fields.append(T.StructField(out_value_col, T.DoubleType()))
     out_schema = T.StructType(fields)
+    cols = list(out_schema.fieldNames())
 
-    tile_sizes = {td.cube_col: td.tile for td in tiled}
-    tile_coords = {td.cube_col: td.coords for td in tiled}
-    next_after_of = {td.cube_col: td.next_after for td in tiled}
-    width_of = {td.cube_col: td.width for td in tiled}
-    kind_of = {td.cube_col: _axis_kind(cube.df, td.cube_col) for td in tiled}
+    batch_size = get_batch_size(descriptor)
     model_dtype = inp.data_type
     dim_order = [d for d in inp.dim_order if d.lower() not in BATCH_DIM_NAMES]
     value_col = cube.value_col
     n_bands = len(ordered_band_labels)
     band_pos = {b: i for i, b in enumerate(ordered_band_labels)}
-    tiled_cols = [td.cube_col for td in tiled]
-    model_dim_of = {td.cube_col: td.model_dim for td in tiled}
+    spark = df.sparkSession
 
-    def infer(pdf: pd.DataFrame) -> pd.DataFrame:
-        # assemble (n_tiles_in_batch, *tile_shape) in model dim order
-        tids = sorted(
-            pdf[[f"__tile_{c}" for c in tiled_cols]]
-            .drop_duplicates()
-            .itertuples(index=False, name=None)
-        )
-        axis_len: dict[str, int] = {}
-        for d in dim_order:
-            if d == band_axis_dim:
-                axis_len[d] = n_bands
-            else:
-                col = next(c for c in tiled_cols if model_dim_of[c] == d)
-                axis_len[d] = tile_sizes[col]
-        tensors, tile_meta = [], []
-        for tid in tids:
-            sel = pdf
-            for c, t in zip(tiled_cols, tid):
-                sel = sel[sel[f"__tile_{c}"] == t]
-            shape = tuple(axis_len[d] for d in dim_order)
-            arr = np.full(shape, np.nan)
-            index_arrays = []
+    def tile_plan(tiled: list[_TiledDim]) -> DataFrame:
+        """Stage 7 onwards for one chunk combination: tile keys (the
+        remainder dropped), batch keys, then the model UDF."""
+        plan = df
+        # coord -> index via a broadcast join against a tiny index table
+        # (raster-resolution-sized). A create_map literal would inline
+        # the whole coordinate axis into the serialized plan — fatal for
+        # a 100k-coordinate dim; the broadcast table costs the same one
+        # driver round-trip but keeps the plan O(1).
+        n_tiles: dict[str, int] = {}
+        for td in tiled:
+            c = td.cube_col
+            if c in over:
+                # the index join alone keeps only the chunk's rows; the
+                # range filter lets the scan skip the rest
+                lo, hi = (
+                    _py_scalar(v, kind_of[c])
+                    for v in (td.coords.flat[0], td.coords.flat[-1])
+                )
+                plan = plan.filter((F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi)))
+            full = tile_count(td.coords.size, td.tile)
+            n_tiles[c] = full
+            # datetime64[ns].tolist() yields raw int nanoseconds — convert
+            # temporal axes back to the python objects Spark rows accept
+            # (µs for timestamps — Spark's native precision — days for dates)
+            coord_vals = td.coords
+            if np.issubdtype(coord_vals.dtype, np.datetime64):
+                unit = "D" if kind_of[c] == "date" else "us"
+                coord_vals = coord_vals.astype(f"datetime64[{unit}]")
+            idx_df = local_rows_df(
+                spark,
+                [(v, i) for i, v in enumerate(coord_vals.tolist())],
+                f"`{c}` {df.schema[c].dataType.simpleString()}, `__idx_{c}` long",
+            )
+            plan = plan.join(F.broadcast(idx_df), c, "inner").filter(
+                F.col(f"__idx_{c}") < full * td.tile
+            )
+            plan = plan.withColumn(
+                f"__tile_{c}", (F.col(f"__idx_{c}") / td.tile).cast("long")
+            )
+
+        # linear tile id -> batch id groups `batch_size` tiles per model call
+        linear = F.lit(0)
+        for td in tiled:
+            linear = linear * n_tiles[td.cube_col] + F.col(f"__tile_{td.cube_col}")
+        plan = plan.withColumn("__batch_id", (linear / batch_size).cast("long"))
+
+        in_dim_names = {td.model_dim: td for td in tiled}
+        tiled_cols = [td.cube_col for td in tiled]
+        collapsed = [td for td in tiled if td.model_dim not in out_dims]
+        axis_len = {
+            d: n_bands if d == band_axis_dim else in_dim_names[d].tile
+            for d in dim_order
+        }
+        tile_shape = tuple(axis_len[d] for d in dim_order)
+
+        def infer(pdf: pd.DataFrame) -> pd.DataFrame:
+            # scatter every row into ONE (n_tiles, *tile_shape) NaN batch
+            # in model dim order; tile ordinals follow sorted tile keys
+            tile_keys = pdf[[f"__tile_{c}" for c in tiled_cols]].to_numpy(
+                dtype=np.int64
+            )
+            tids, ordinal = np.unique(tile_keys, axis=0, return_inverse=True)
+            index = [ordinal.reshape(-1)]
             for d in dim_order:
                 if d == band_axis_dim:
-                    index_arrays.append(
-                        sel[band_col].map(band_pos).to_numpy(dtype=np.int64)
-                    )
+                    index.append(pdf[band_col].map(band_pos).to_numpy(dtype=np.int64))
                 else:
-                    col = next(c for c in tiled_cols if model_dim_of[c] == d)
-                    t = tid[tiled_cols.index(col)]
-                    index_arrays.append(
-                        sel[f"__idx_{col}"].to_numpy(dtype=np.int64)
-                        - t * tile_sizes[col]
+                    td = in_dim_names[d]
+                    k = tiled_cols.index(td.cube_col)
+                    index.append(
+                        pdf[f"__idx_{td.cube_col}"].to_numpy(dtype=np.int64)
+                        - tile_keys[:, k] * td.tile
                     )
-            arr[tuple(index_arrays)] = sel[value_col].to_numpy(dtype=np.float64)
-            tensors.append(arr)
-            tile_meta.append(tid)
-        batch = np.stack(tensors)
+            batch = np.full((len(tids), *tile_shape), np.nan)
+            batch[tuple(index)] = pdf[value_col].to_numpy(dtype=np.float64)
 
-        all_nan = np.isnan(batch).all()
-        if all_nan:
-            # sparsity skip: no model call (data_model.py:899-901)
-            out_tile_shape = [
-                s if s != -1 else axis_len.get(d, 1)
-                for d, s in zip(out_dims, out_shape)
-            ]
-            out = np.full((batch.shape[0], *out_tile_shape), np.nan)
-        else:
-            # stage 5: the model sees its declared input dtype
-            # (reference preprocess_datacube, data_model.py:1248) —
-            # int8/uint8/float16 models must not get float64 tensors.
-            # Applied after the NaN sparsity check (integer casts
-            # destroy NaN markers).
-            if model_dtype not in (None, "float64", "double"):
-                batch = batch.astype(model_dtype)
-            out = np.asarray(predict_fn(batch), dtype=np.float64)
-            if out.ndim == len(out_dims):  # model dropped the batch axis
-                out = out[None, ...]
-
-        # vectorized emission: one DataFrame per tile built from flat
-        # numpy arrays (meshgrid ravel), never per-cell Python dicts —
-        # a 224x224x24 output tile is ~1.2M cells per batch.
-        frames = []
-        pass_vals = {c: pdf[c].iloc[0] for c in passthrough}
-        cols = list(out_schema.fieldNames())
-        for bi, tid in enumerate(tile_meta):
-            coords_per_axis = []
-            for ax, d in enumerate(out_dims):
-                n_out = out.shape[1 + ax]
-                if d == band_axis_dim or d.lower() in (
-                    "band", "bands", "channel", "channels",
-                ):
-                    in_c = np.array(ordered_band_labels)
-                    nxt, width = None, None
-                elif d in in_dim_names:
-                    col = in_dim_names[d].cube_col
-                    t = tid[tiled_cols.index(col)]
-                    full_axis = tile_coords[col]
-                    in_c = full_axis[
-                        t * tile_sizes[col] : (t + 1) * tile_sizes[col]
-                    ]
-                    end = (t + 1) * tile_sizes[col]
-                    nxt = (
-                        full_axis[end]
-                        if end < full_axis.size
-                        else next_after_of[col]  # chunk lookahead
-                    )
-                    # numeric default: the axis' first spacing. Datetime
-                    # axes get NO default — their branch uses the
-                    # full-axis MEAN spacing (reference data_model.py:834)
-                    # unless a chunked sub-request passed the global
-                    # mean down as the override.
-                    width = width_of[col]
-                    if (
-                        width is None
-                        and full_axis.size > 1
-                        and np.issubdtype(full_axis.dtype, np.number)
-                    ):
-                        width = full_axis[1] - full_axis[0]
-                else:
-                    in_c = np.array([])
-                    nxt, width = None, None
-                axis = (
-                    tile_coords[in_dim_names[d].cube_col]
-                    if d in in_dim_names
-                    else None
-                )
-                regen = regenerate_coords(
-                    in_c, n_out, next_coord=nxt, coord_width=width,
-                    full_axis=axis,
-                )
-                # Temporal columns: regeneration works in datetime64[ns]
-                # but the engine types are coarser — truncate to µs
-                # (TimestampType's native precision; the safe Arrow cast
-                # rejects sub-µs remainders) or to days for DateType
-                # (as date objects — a date column holds nothing finer).
-                if d in in_dim_names and np.issubdtype(
-                    np.asarray(regen).dtype, np.datetime64
-                ):
-                    kind = kind_of.get(in_dim_names[d].cube_col)
-                    if kind == "date":
-                        regen = regen.astype("datetime64[D]").astype(object)
-                    elif kind == "ts":
-                        regen = regen.astype("datetime64[us]")
-                coords_per_axis.append(regen)
-            collapsed_vals = {}
-            for td in collapsed:
-                t = tid[tiled_cols.index(td.cube_col)]
-                cval = collapse_coords(
-                    tile_coords[td.cube_col][t * td.tile : (t + 1) * td.tile]
-                )
-                if isinstance(cval, np.datetime64):
-                    cval = _py_scalar(cval, kind_of.get(td.cube_col))
-                collapsed_vals[td.cube_col] = cval
-            flat_val = out[bi].ravel()
-            data: dict = {}
-            if coords_per_axis:
-                mesh = np.meshgrid(*coords_per_axis, indexing="ij")
-                for ax, col_name in enumerate(out_cols):
-                    data[col_name] = mesh[ax].ravel()
+            if np.isnan(batch).all():
+                # sparsity skip: no model call (data_model.py:899-901)
+                out_tile_shape = [
+                    s if s != -1 else axis_len.get(d, 1)
+                    for d, s in zip(out_dims, out_shape)
+                ]
+                out = np.full((batch.shape[0], *out_tile_shape), np.nan)
             else:
-                for col_name in out_cols:
-                    data[col_name] = np.full(flat_val.size, None, dtype=object)
-            data[out_value_col] = flat_val
-            frame = pd.DataFrame(data)
-            for c, v in {**pass_vals, **collapsed_vals}.items():
-                frame[c] = v
-            frames.append(frame)
-        if not frames:
-            return pd.DataFrame(columns=cols)
-        return pd.concat(frames, ignore_index=True).reindex(columns=cols)
+                # stage 5: the model sees its declared input dtype
+                # (reference preprocess_datacube, data_model.py:1248) —
+                # int8/uint8/float16 models must not get float64 tensors.
+                # Applied after the NaN sparsity check (integer casts
+                # destroy NaN markers).
+                if model_dtype not in (None, "float64", "double"):
+                    batch = batch.astype(model_dtype)
+                out = np.asarray(predict_fn(batch), dtype=np.float64)
+                if out.ndim == len(out_dims):  # model dropped the batch axis
+                    out = out[None, ...]
 
-    return df.groupBy(*keys).applyInPandas(
-        lambda key, pdf: infer(pdf), schema=out_schema
-    )
+            # vectorized emission: flat numpy columns per tile (meshgrid
+            # ravel), concatenated into ONE DataFrame per batch — never
+            # per-cell Python dicts; a 224x224x24 output tile is ~1.2M
+            # cells per batch.
+            mesh_parts: list[list[np.ndarray]] = [[] for _ in out_cols]
+            collapsed_vals: dict[str, list] = {td.cube_col: [] for td in collapsed}
+            for tid in tids:
+                coords_per_axis = []
+                for ax, d in enumerate(out_dims):
+                    n_out = out.shape[1 + ax]
+                    full_axis = None
+                    if d == band_axis_dim or d.lower() in (
+                        "band", "bands", "channel", "channels",
+                    ):
+                        in_c = np.array(ordered_band_labels)
+                        nxt, width = None, None
+                    elif d in in_dim_names:
+                        td = in_dim_names[d]
+                        t = tid[tiled_cols.index(td.cube_col)]
+                        full_axis = td.coords
+                        end = (t + 1) * td.tile
+                        in_c = full_axis[t * td.tile : end]
+                        # past the chunk's end: the chunk lookahead
+                        nxt = full_axis[end] if end < full_axis.size else td.next_after
+                        # numeric default: the axis' first spacing.
+                        # Datetime axes get NO default — their branch uses
+                        # the full-axis MEAN spacing (reference
+                        # data_model.py:834) unless the chunk carries the
+                        # global mean as its width.
+                        width = td.width
+                        if (
+                            width is None
+                            and full_axis.size > 1
+                            and np.issubdtype(full_axis.dtype, np.number)
+                        ):
+                            width = full_axis[1] - full_axis[0]
+                    else:
+                        in_c = np.array([])
+                        nxt, width = None, None
+                    regen = regenerate_coords(
+                        in_c, n_out, next_coord=nxt, coord_width=width,
+                        full_axis=full_axis,
+                    )
+                    # Temporal columns: regeneration works in
+                    # datetime64[ns] but the engine types are coarser —
+                    # truncate to µs (TimestampType's native precision;
+                    # the safe Arrow cast rejects sub-µs remainders) or
+                    # to days for DateType (as date objects — a date
+                    # column holds nothing finer).
+                    if d in in_dim_names and np.issubdtype(
+                        np.asarray(regen).dtype, np.datetime64
+                    ):
+                        kind = kind_of[in_dim_names[d].cube_col]
+                        if kind == "date":
+                            regen = regen.astype("datetime64[D]").astype(object)
+                        elif kind == "ts":
+                            regen = regen.astype("datetime64[us]")
+                    coords_per_axis.append(regen)
+                mesh = np.meshgrid(*coords_per_axis, indexing="ij")
+                for parts, m in zip(mesh_parts, mesh):
+                    parts.append(m.ravel())
+                for td in collapsed:
+                    t = tid[tiled_cols.index(td.cube_col)]
+                    cval = collapse_coords(td.coords[t * td.tile : (t + 1) * td.tile])
+                    if isinstance(cval, np.datetime64):
+                        cval = _py_scalar(cval, kind_of[td.cube_col])
+                    collapsed_vals[td.cube_col].append(cval)
+            cells = int(np.prod(out.shape[1:]))
+            data = {c: np.concatenate(p) for c, p in zip(out_cols, mesh_parts)}
+            data[out_value_col] = out.reshape(-1)
+            frame = pd.DataFrame(data)
+            for c in passthrough:
+                frame[c] = pdf[c].iloc[0]
+            for c, vals in collapsed_vals.items():
+                frame[c] = np.repeat(pd.Series(vals).to_numpy(), cells)
+            return frame.reindex(columns=cols)
+
+        keys = passthrough + ["__batch_id"]
+        return plan.groupBy(*keys).applyInPandas(
+            lambda key, pdf: infer(pdf), schema=out_schema
+        )
+
+    # --- one tile plan per chunk combination, unioned -----------------
+    plans = []
+    for combo in itertools.product(*chunks_of.values()):
+        chunk_of = dict(zip(chunks_of, combo))
+        tiled = [
+            _TiledDim(d, col, s if s != -1 else size_of[col], *chunk_of[col])
+            for d, s, _, col in resolved
+        ]
+        plans.append(tile_plan(tiled))
+    return functools.reduce(DataFrame.unionByName, plans)
 
 
 def sklearn_fast_path(

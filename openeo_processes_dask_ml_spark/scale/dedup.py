@@ -63,21 +63,6 @@ def tokens_expr(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
-def shingles_expr(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column as an array.
-
-    NOTE: higher-order functions are interpreted (not codegen) and the
-    tokenizer subtree gets inlined into the lambda — use only where a
-    per-row array is genuinely needed. The hot path is ``shingle_rows``
-    below (exploded form, whole-stage codegen)."""
-    toks = tokens_expr(text)
-    idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(toks, i + F.lit(j)) for j in range(n)]
-    )
-    return F.array_distinct(F.transform(idx, gram))
-
-
 def ngram_array_expr(text_col: str, n: int) -> Column:
     """Overlapping token ``n``-grams of a text column as an array,
     positionally ordered (element ``i`` is the gram starting at token

@@ -46,15 +46,6 @@ def _norm(a: Column, dim: int | None = None) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def with_unit_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Cast to double and L2-normalize once, so every later cosine is a
-    plain dot product (do the O(n) work once, not per pair)."""
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return df.withColumn("__vec", dbl).withColumn(
-        "__unit", F.transform(F.col("__vec"), lambda x: x / _norm(F.col("__vec")))
-    )
-
-
 def cosine_expr(a: Column, b: Column, dim: int | None = None) -> Column:
     """cosine(a, b) on double arrays."""
     return _dot(a, b, dim) / (_norm(a, dim) * _norm(b, dim))

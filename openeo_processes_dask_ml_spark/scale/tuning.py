@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -73,9 +74,7 @@ def local_rows_df(
         ),
     )
     if isinstance(schema, str):
-        from pyspark.sql.types import _parse_datatype_string
-
-        schema = _parse_datatype_string(schema)
+        schema = StructType.fromDDL(schema)
     if not rows:
         return spark.createDataFrame([], schema)
     return spark.createDataFrame(sc.parallelize(rows, slices), schema)

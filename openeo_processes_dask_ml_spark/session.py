@@ -36,8 +36,3 @@ def get_spark(
         .getOrCreate()
     )
 
-
-def configure_for_inference(spark: SparkSession, batch_size: int) -> None:
-    """1 Arrow batch = 1 model batch — the Spark analog of the reference's
-    1-chunk-per-batch rechunk (data_model.py:647-664, 1056-1057)."""
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))

@@ -412,22 +412,33 @@ def _rows_key(rows):
 
 
 def test_run_model_tiled_axis_cap_guard(spark, raster_cube):
-    """VERDICT r8 #7 + r14 #2: the cap is still enforced executor-side
-    (the driver never receives more than cap+1 values per scan), but
-    an over-cap TILED axis now auto-chunks into sub-grid requests
-    instead of raising; only unchunkable cases (auto_chunk=False,
-    full-extent model dims) raise with guidance."""
+    """The cap is enforced executor-side (the driver never receives
+    more than cap+1 values per scan). An over-cap TILED axis is walked
+    in tile-aligned chunks; an over-cap axis the model consumes whole
+    (shape -1) cannot be chunked and raises with guidance."""
     from openeo_processes_dask_ml_spark.ml.inference import run_model_tiled
 
     descriptor = _xy_descriptor()
     fn = lambda b: b[:, 0] - b[:, 1]  # noqa: E731
-    # opt-out still raises the explicit error
+    whole_x = MLModelDescriptor(
+        item={"id": "t"},
+        input=ModelInput.parse(
+            {
+                "bands": ["nir", "red"],
+                "input": {
+                    "shape": [-1, 2, -1, 2],  # x consumed whole
+                    "dim_order": ["batch", "bands", "x", "y"],
+                },
+            }
+        ),
+        output=ModelOutput.parse(
+            {"result": {"shape": [-1, -1, 2], "dim_order": ["batch", "x", "y"]}}
+        ),
+        framework="fake",
+    )
     with pytest.raises(ValueError, match="max_axis_elements"):
-        run_model_tiled(
-            raster_cube, descriptor, fn, max_axis_elements=2,
-            auto_chunk=False,
-        )
-    # default: completes via chunked sub-grid requests, identical to
+        run_model_tiled(raster_cube, whole_x, fn, max_axis_elements=2)
+    # a tiled axis completes via chunked tile plans, identical to
     # the unchunked run (incl. the all-NaN tile -> NULL reassembly)
     chunked = run_model_tiled(
         raster_cube, descriptor, fn, max_axis_elements=2
@@ -474,32 +485,36 @@ def test_run_model_tiled_chunked_remainder_matches_global(spark, raster_cube):
 
 
 def test_run_model_tiled_chunked_skips_axis_rescans(spark, raster_cube):
-    """Sub-requests receive pre-collected axes (and the band universe
-    via the attrs hint), so the recursion plans no further axis
-    aggregations — pinned by counting agg jobs via a recursion spy."""
-    from openeo_processes_dask_ml_spark.ml import inference as inf
+    """Job-count ratchet on building the plan: the unchunked build runs
+    ONE axis aggregation (2 jobs under AQE), the 2x2-chunked build adds
+    exactly the two chunk walks per axis (4 aggregations) and nothing
+    per chunk combination — no chunk rescans its axes. Counted with a
+    job group around the build; the counts may only go down."""
+    from openeo_processes_dask_ml_spark.ml.inference import run_model_tiled
 
+    sc = spark.sparkContext
     descriptor = _xy_descriptor()
-    calls = []
-    orig = inf.run_model_tiled
 
-    def spy(cube, *a, **kw):
-        calls.append(kw.get("_axis_override"))
-        return orig(cube, *a, **kw)
+    def build_jobs(cap):
+        group = f"run_model_tiled_build_cap{cap}"
+        sc.setJobGroup(group, "run_model_tiled build")
+        try:
+            out = run_model_tiled(
+                raster_cube, descriptor, lambda b: b[:, 0],
+                max_axis_elements=cap,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
-    inf.run_model_tiled = spy
-    try:
-        out = spy(
-            raster_cube, descriptor, lambda b: b[:, 0],
-            max_axis_elements=2,
-        )
-        out.collect()
-    finally:
-        inf.run_model_tiled = orig
-    # outer call + 2x2 chunk combinations
-    assert len(calls) == 5 and calls[0] is None
-    for ov in calls[1:]:
-        assert set(ov) == {"x", "y"}  # both axes handed down pre-collected
+    n_whole, whole = build_jobs(1000)
+    n_chunked, chunked = build_jobs(2)  # x and y both chunk as 2 + 2
+    assert n_whole == 2
+    assert n_chunked == 10
+    assert _rows_key(chunked.collect()) == _rows_key(whole.collect())
 
 
 def test_run_model_tiled_chunked_short_axis_matches_global_error(
